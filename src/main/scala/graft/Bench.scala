@@ -104,7 +104,7 @@ object Bench {
       .map { case (fam, rs) =>
         "\"" + fam + "\":" + f3(rs.map(_._2).filter(_ >= 0).sum)
       }.mkString("{", ",", "}")
-    val top = results.toSeq.sortBy(-_._2).take(10)
+    val top = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val nErr = results.values.count(_ < 0)
@@ -142,7 +142,7 @@ object Bench {
     // a _c${cpus} suffix.
     val artifact =
       if (benchOnly.isDefined) "bench_isolated.json"
-      else if (cpus == "32") "bench_full.json"
+      else if (cpus.trim.toIntOption.contains(32)) "bench_full.json"
       else s"bench_full_c$cpus.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact),
       s"""{"total_sec":$total,"sf":"$sfDir","cpus":$cpus,""" +

@@ -6,8 +6,7 @@ import java.util
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.vcr.Tape
-import org.apache.hadoop.conf.Configuration
+import graft.vcr.{Tape, TapeFileSlice}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,6 +14,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,14 +29,20 @@ import org.apache.spark.util.SerializableConfiguration
   * InjectableS3Emitter.java:38-44) surfaces as metadata columns, which
   * the plain text reader cannot give you.
   *
+  * This is the one decoded reader of a tape: batch replay
+  * (`TapePlayer.read`), the seq seek (`TapeManifest.readSeqRange`), the
+  * decoded estimate and the streaming replay all scan through it.
+  *
   * Scale behaviors baked into the scan:
   * - `dt` filters push down into directory pruning at planning time —
   *   a day-range replay never lists, let alone reads, other days
-  *   (reference behavior: KinesisPlayer.java:221-246).
-  * - Files bin-pack into input partitions of ~`TapeScan.TargetSplit`
-  *   bytes, so a tape of millions of small flush files doesn't become
-  *   millions of tasks, and one task never reads one huge day alone
-  *   unless it is genuinely one file.
+  *   (reference behavior: KinesisPlayer.java:221-246). `EqualTo`/`In`
+  *   on `src` prune to the named files the same way.
+  * - Files bin-pack into input partitions sized the way Spark's file
+  *   sources size them, from the input and the session's cores
+  *   (`spark.sql.files.maxPartitionBytes` / `openCostInBytes`): a tape
+  *   of many small flush files does not become as many tasks, and a
+  *   small tape still spreads across the cores.
   */
 class TapeDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tape"
@@ -57,7 +63,7 @@ object TapeTable {
   val Schema: StructType = StructType(Seq(
     StructField(Tape.PayloadCol, BinaryType, nullable = false),
     StructField(Tape.DtCol, StringType, nullable = false),
-    StructField("src", StringType, nullable = false),
+    StructField(Tape.SrcCol, StringType, nullable = false),
     StructField("seq_first", LongType, nullable = true),
     StructField("seq_last", LongType, nullable = true)))
 }
@@ -93,18 +99,18 @@ class TapeScanBuilder(path: String, maxFilesPerTrigger: Int = 0,
   extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var dtFilters: Array[Filter] = Array.empty
+  private var pruning: Array[Filter] = Array.empty
   private var required: StructType = TapeTable.Schema
 
-  /** dt-only comparisons are fully applied by directory pruning; all
-    * other filters stay post-scan.
+  /** `dt` and `src` filters the listing can apply are fully applied by
+    * pruning; all other filters stay post-scan.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (dt, rest) = filters.partition(TapeScan.isPrunableDtFilter)
-    dtFilters = dt
+    val (prunable, rest) = filters.partition(TapeScan.pruner(_).isDefined)
+    pruning = prunable
     rest
   }
-  override def pushedFilters(): Array[Filter] = dtFilters
+  override def pushedFilters(): Array[Filter] = pruning
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     required = requiredSchema
@@ -113,45 +119,72 @@ class TapeScanBuilder(path: String, maxFilesPerTrigger: Int = 0,
   override def build(): Scan = {
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
-    new TapeScan(path, dtFilters, required,
+    new TapeScan(path, pruning, required,
       new SerializableConfiguration(conf), maxFilesPerTrigger,
       maxBytesPerTrigger)
   }
 }
 
 object TapeScan {
-  /** target bytes per input partition when bin-packing tape files */
-  val TargetSplit: Long = 128L * 1024 * 1024
-
-  def isPrunableDtFilter(f: Filter): Boolean = f match {
-    case EqualTo(a, _: String) => a == Tape.DtCol
-    case GreaterThan(a, _: String) => a == Tape.DtCol
-    case GreaterThanOrEqual(a, _: String) => a == Tape.DtCol
-    case LessThan(a, _: String) => a == Tape.DtCol
-    case LessThanOrEqual(a, _: String) => a == Tape.DtCol
-    case In(a, vs) => a == Tape.DtCol && vs.forall(_.isInstanceOf[String])
-    case _ => false
+  /** The test a filter the listing can apply puts on its column's
+    * value: any string comparison on `dt` (ISO dates compare
+    * lexicographically), equality or membership on `src`.
+    */
+  def pruner(f: Filter): Option[String => Boolean] = f match {
+    case EqualTo(Tape.DtCol | Tape.SrcCol, v: String) => Some(_ == v)
+    case In(Tape.DtCol | Tape.SrcCol, vs) if vs.forall(_.isInstanceOf[String]) =>
+      val set = vs.toSet[Any]
+      Some(set(_))
+    case GreaterThan(Tape.DtCol, v: String) => Some(_ > v)
+    case GreaterThanOrEqual(Tape.DtCol, v: String) => Some(_ >= v)
+    case LessThan(Tape.DtCol, v: String) => Some(_ < v)
+    case LessThanOrEqual(Tape.DtCol, v: String) => Some(_ <= v)
+    case _ => None
   }
 
-  /** ISO dates compare lexicographically, so string compares suffice. */
-  def dtMatches(dt: String, f: Filter): Boolean = f match {
-    case EqualTo(_, v: String) => dt == v
-    case GreaterThan(_, v: String) => dt > v
-    case GreaterThanOrEqual(_, v: String) => dt >= v
-    case LessThan(_, v: String) => dt < v
-    case LessThanOrEqual(_, v: String) => dt <= v
-    case In(_, vs) => vs.exists(_ == dt)
-    case _ => true
+  /** The tape files the pruning filters keep: `dt` filters choose the
+    * day directories to list, `src` filters the files listed.
+    */
+  def listFiles(path: String, pruning: Array[Filter],
+                conf: SerializableConfiguration): Seq[TapeFileSlice] = {
+    val root = new Path(path)
+    val (onDt, onSrc) = pruning.partition(_.references.head == Tape.DtCol)
+    val keepDay = onDt.flatMap(pruner)
+    val keepSrc = onSrc.flatMap(pruner)
+    Tape.listFiles(FileSystem.get(root.toUri, conf.value), root,
+      dt => keepDay.forall(_(dt)))
+      .filter(f => keepSrc.forall(_(f.file)))
+  }
+
+  /** Next-fit over files sorted by size, descending, as Spark's
+    * `FilePartition.getFilePartitions` packs: a partition closes when
+    * the next file would overflow `split`, and each file costs its size
+    * plus `openCost`.
+    */
+  def pack(files: Seq[TapeFileSlice], split: Long,
+           openCost: Long): Array[InputPartition] = {
+    val parts = ArrayBuffer[InputPartition]()
+    val current = ArrayBuffer[TapeFileSlice]()
+    var size = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      parts += TapeInputPartition(current.toArray)
+      current.clear()
+      size = 0L
+    }
+    for (f <- files.sortBy(-_.size)) {
+      if (size + f.size > split) close()
+      size += f.size + openCost
+      current += f
+    }
+    close()
+    parts.toArray
   }
 }
-
-final case class TapeFileSlice(file: String, dt: String, size: Long,
-                               seqFirst: Long, seqLast: Long)
 
 final case class TapeInputPartition(files: Array[TapeFileSlice])
   extends InputPartition
 
-class TapeScan(path: String, dtFilters: Array[Filter], required: StructType,
+class TapeScan(path: String, pruning: Array[Filter], required: StructType,
                conf: SerializableConfiguration,
                maxFilesPerTrigger: Int = 0,
                maxBytesPerTrigger: Long = 0L) extends Scan with Batch {
@@ -160,51 +193,26 @@ class TapeScan(path: String, dtFilters: Array[Filter], required: StructType,
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TapeMicroBatchStream(path, dtFilters, required, conf,
+    new TapeMicroBatchStream(path, pruning, required, conf,
       maxFilesPerTrigger, maxBytesPerTrigger)
   override def description(): String =
-    s"TapeScan path=$path prunedBy=[${dtFilters.mkString(", ")}]"
+    s"TapeScan path=$path prunedBy=[${pruning.mkString(", ")}]"
 
-  private val SeqRangeRe = "(\\d+)-(\\d+)(?:\\.txt)?".r
-
-  /** Driver-side planning: list ONLY day directories matching the
-    * pushed dt predicates, then bin-pack files into ~TargetSplit
-    * partitions (largest-first first-fit).
+  /** Driver-side planning: list only the day directories and files the
+    * pushed filters keep, then pack them into partitions of
+    * `min(maxPartitionBytes, max(openCost, (Σsize + n·openCost) / cores))`
+    * bytes — Spark's file-source split size.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, conf.value)
-    if (!fs.exists(root)) return Array.empty
-    val slices = ArrayBuffer[TapeFileSlice]()
-    for (dtDir <- fs.listStatus(root) if dtDir.isDirectory) {
-      val name = dtDir.getPath.getName
-      if (name.startsWith(s"${Tape.DtCol}=")) {
-        val dt = name.stripPrefix(s"${Tape.DtCol}=")
-        if (dtFilters.forall(TapeScan.dtMatches(dt, _))) {
-          for (f <- fs.listStatus(dtDir.getPath)
-               if f.isFile && !f.getPath.getName.startsWith("_")
-                 && !f.getPath.getName.startsWith(".")) {
-            val (sf, sl) = f.getPath.getName match {
-              case SeqRangeRe(a, b) => (a.toLong, b.toLong)
-              case _ => (-1L, -1L)
-            }
-            slices += TapeFileSlice(f.getPath.toString, dt, f.getLen, sf, sl)
-          }
-        }
-      }
-    }
-    // largest-first first-fit bin-packing to ~TargetSplit bytes
-    val bins = ArrayBuffer[(ArrayBuffer[TapeFileSlice], Long)]()
-    for (s <- slices.sortBy(-_.size)) {
-      bins.find(_._2 + s.size <= TapeScan.TargetSplit) match {
-        case Some(bin) =>
-          bin._1 += s
-          val i = bins.indexOf(bin)
-          bins(i) = (bin._1, bin._2 + s.size)
-        case None => bins += ((ArrayBuffer(s), s.size))
-      }
-    }
-    bins.map(b => TapeInputPartition(b._1.toArray): InputPartition).toArray
+    val files = TapeScan.listFiles(path, pruning, conf)
+    val sql = SQLConf.get
+    val openCost = sql.filesOpenCostInBytes
+    val cores = sql.filesMinPartitionNum.getOrElse(
+      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    val total = files.map(_.size + openCost).sum
+    val split = math.min(sql.filesMaxPartitionBytes,
+      math.max(openCost, total / cores))
+    TapeScan.pack(files, split, openCost)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -222,12 +230,14 @@ class TapeReaderFactory(required: StructType, conf: SerializableConfiguration)
       private var reader: BufferedReader = _
       private var current: TapeFileSlice = _
       private var line: String = _
+      private var lineNo = 0L
 
       private def nextFile(): Boolean = {
         if (reader != null) { reader.close(); reader = null }
         fileIdx += 1
         if (fileIdx >= files.length) return false
         current = files(fileIdx)
+        lineNo = 0L
         val p = new Path(current.file)
         val fs = FileSystem.get(p.toUri, conf.value)
         reader = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
@@ -240,18 +250,29 @@ class TapeReaderFactory(required: StructType, conf: SerializableConfiguration)
           line = reader.readLine()
           if (line == null) {
             if (!nextFile()) return false
-          } else if (line.nonEmpty) { // reference skips empty lines
-            return true
+          } else {
+            lineNo += 1
+            if (line.nonEmpty) return true // reference skips empty lines
           }
         }
         false
       }
 
+      /** Strict standard Base64, as the writer encodes; a line that does
+        * not decode fails the read and names its file and line.
+        */
+      private def payload(): Array[Byte] =
+        try java.util.Base64.getDecoder.decode(line)
+        catch {
+          case e: IllegalArgumentException => throw new java.io.IOException(
+            s"tape line ${current.file}:$lineNo is not Base64: ${e.getMessage}", e)
+        }
+
       override def get(): InternalRow = {
         val values = fieldIdx.map {
-          case Tape.PayloadCol => java.util.Base64.getDecoder.decode(line)
+          case Tape.PayloadCol => payload()
           case Tape.DtCol => UTF8String.fromString(current.dt)
-          case "src" => UTF8String.fromString(current.file)
+          case Tape.SrcCol => UTF8String.fromString(current.file)
           case "seq_first" =>
             if (current.seqFirst >= 0) java.lang.Long.valueOf(current.seqFirst)
             else null

@@ -1,7 +1,6 @@
 package graft.vcr
 
 import java.time.LocalDateTime
-import java.time.temporal.ChronoUnit
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -13,9 +12,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * The size sum is a pure file-metadata walk over the pruned `dt=` day
   * directories — same O(#files-in-range) listing the reference does, no
-  * data reads. (At extreme file counts a distributed listing via a Spark
-  * job over day prefixes would shard it; sizes never require opening
-  * objects.)
+  * data reads — through the tape's one file lister, so it counts
+  * exactly the files replay reads. (At extreme file counts a
+  * distributed listing via a Spark job over day prefixes would shard
+  * it; sizes never require opening objects.)
   */
 object Estimator {
 
@@ -25,26 +25,16 @@ object Estimator {
   def estimate(conf: Configuration, root: String, stream: String,
                start: LocalDateTime, end: Option[LocalDateTime],
                shards: Int): Estimate = {
-    val endEff = TimeArg.effectiveEnd(start, end)
+    val (first, last) = (start.toLocalDate.toString,
+      TimeArg.effectiveEnd(start, end).toLocalDate.toString)
     val dir = new Path(s"$root/$stream")
-    val fs = FileSystem.get(dir.toUri, conf)
-    var files = 0L
-    var bytes = 0L
-    // Day loop over [start, endEff] — mirrors KinesisPlayer.java:221-227;
-    // each iteration lists exactly one dt= directory.
-    var d = start.toLocalDate
-    val lastDay = endEff.toLocalDate
-    while (!d.isAfter(lastDay)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        fs.listStatus(dayDir).foreach { st =>
-          if (st.isFile) { files += 1; bytes += st.getLen }
-        }
-      }
-      d = d.plus(1, ChronoUnit.DAYS)
-    }
+    // the day folders in [start, endEff] — KinesisPlayer.java:221-227 —
+    // holding the files replay reads, no more
+    val files = Tape.listFiles(FileSystem.get(dir.toUri, conf), dir,
+      dt => dt >= first && dt <= last)
+    val bytes = files.map(_.size).sum
     val minutes = minutesFor(bytes, shards)
-    Estimate(files, bytes, shards, minutes, humanize(minutes))
+    Estimate(files.size.toLong, bytes, shards, minutes, humanize(minutes))
   }
 
   /** Shard count discovered from the target stream's endpoint, like the
@@ -67,9 +57,10 @@ object Estimator {
     * newline per record, and Kinesis's 1 MB/s/shard cap meters the
     * PutRecords PAYLOAD, not its base64 transport encoding — so the
     * object-size model systematically overestimates replay time by
-    * ~33%. This variant reconciles through the tape DSv2 read
-    * ([[graft.sources.TapeDataSource]]): `dt` predicates prune to the
-    * requested day partitions in the planner, `src` counts the files,
+    * ~33%. This variant reconciles through the replay read itself
+    * ([[TapePlayer.read]], the tape DSv2 scan): `dt` predicates prune
+    * to the requested day partitions in the planner, `src` counts the
+    * files,
     * and the byte sum is `octet_length(payload)` — the exact quantity
     * `vcr_batch`'s PutRecords budget and the replay pacer
     * (`replayStreamShardPaced`) meter. Costs one pruned scan of the
@@ -81,12 +72,9 @@ object Estimator {
                       start: LocalDateTime, end: Option[LocalDateTime],
                       shards: Int): Estimate = {
     import org.apache.spark.sql.functions._
-    val endEff = TimeArg.effectiveEnd(start, end)
-    val tape = spark.read.format("tape").load(s"$root/$stream")
-      .filter(col(Tape.DtCol) >= lit(start.toLocalDate.toString) &&
-        col(Tape.DtCol) <= lit(endEff.toLocalDate.toString))
+    val tape = TapePlayer.read(spark, root, stream, start, end)
     val row = tape.agg(
-      countDistinct(col("src")).as("files"),
+      countDistinct(col(Tape.SrcCol)).as("files"),
       coalesce(sum(octet_length(col(Tape.PayloadCol))), lit(0L)).as("bytes"))
       .head()
     val (files, bytes) = (row.getLong(0), row.getLong(1))

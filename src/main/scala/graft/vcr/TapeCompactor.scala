@@ -34,8 +34,6 @@ object TapeCompactor {
   final case class Result(groupsMerged: Int, filesBefore: Long,
                           filesAfter: Long)
 
-  private val SeqRangeRe = "(\\d+)-(\\d+)(?:\\.txt)?".r
-
   def compact(spark: SparkSession, root: String, stream: String,
               start: LocalDateTime, end: Option[LocalDateTime],
               targetBytes: Long = 128L * 1024 * 1024): Result = {
@@ -44,38 +42,28 @@ object TapeCompactor {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(dir.toUri, conf)
 
-    // driver-side metadata pass: per day, bin-pack files (in seq order)
+    val (first, last) = (start.toLocalDate.toString,
+      endEff.toLocalDate.toString)
+    def listRange() = Tape.listFiles(fs, dir, dt => dt >= first && dt <= last)
+
+    // driver-side metadata pass: per day, bin-pack the files whose name
+    // declares a seq range, in seq order
+    val ranged = listRange().filter(_.seqFirst >= 0)
     val groups = ArrayBuffer[Group]()
-    var filesBefore = 0L
-    var d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        val ranged = fs.listStatus(dayDir).toSeq
-          .filter(st => st.isFile && (st.getPath.getName match {
-            case SeqRangeRe(_, _) => true
-            case _ => false
-          }))
-          .map { st =>
-            val SeqRangeRe(a, b) = st.getPath.getName
-            (st.getPath.toString, a.toLong, b.toLong, st.getLen)
-          }
-          .sortBy(_._2)
-        filesBefore += ranged.size
-        var bucket = ArrayBuffer[(String, Long, Long, Long)]()
-        var size = 0L
-        def flush(): Unit = if (bucket.size > 1) {
-          groups += Group(d.toString, bucket.map(_._1).toSeq,
-            bucket.map(_._2).min, bucket.map(_._3).max, size)
-          bucket = ArrayBuffer(); size = 0L
-        } else { bucket = ArrayBuffer(); size = 0L }
-        for (f <- ranged) {
-          if (size > 0 && size + f._4 > targetBytes) flush()
-          bucket += f; size += f._4
-        }
-        flush()
+    for ((dt, files) <- ranged.groupBy(_.dt).toSeq.sortBy(_._1)) {
+      var bucket = ArrayBuffer[TapeFileSlice]()
+      var size = 0L
+      def flush(): Unit = {
+        if (bucket.size > 1)
+          groups += Group(dt, bucket.map(_.file).toSeq,
+            bucket.map(_.seqFirst).min, bucket.map(_.seqLast).max, size)
+        bucket = ArrayBuffer(); size = 0L
       }
-      d = d.plusDays(1)
+      for (f <- files.sortBy(_.seqFirst)) {
+        if (size > 0 && size + f.size > targetBytes) flush()
+        bucket += f; size += f.size
+      }
+      flush()
     }
 
     // distributed merge: one task per group
@@ -114,16 +102,7 @@ object TapeCompactor {
       }
     }
 
-    var filesAfter = 0L
-    d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new Path(dir, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir))
-        filesAfter += fs.listStatus(dayDir).count(st => st.isFile &&
-          !st.getPath.getName.startsWith("."))
-      d = d.plusDays(1)
-    }
-    Result(groups.size, filesBefore, filesAfter)
+    Result(groups.size, ranged.size.toLong, listRange().size.toLong)
   }
 
   /** `days` carries the deleted partition values so the caller can

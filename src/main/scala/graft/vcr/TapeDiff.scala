@@ -18,11 +18,7 @@ object TapeDiff {
   private def digests(spark: SparkSession, root: String,
                       stream: String): DataFrame = {
     val dir = s"$root/$stream"
-    // partition inference types dt= as DATE; the digest table keys on
-    // the partition NAME, so pin it back to string
-    val lines = spark.read.option("basePath", dir).text(dir)
-      .withColumn(Tape.DtCol, col(Tape.DtCol).cast("string"))
-    lines.groupBy(col(Tape.DtCol))
+    Tape.rawLines(spark, dir, Seq(dir)).groupBy(col(Tape.DtCol))
       .agg(count(lit(1)).as("n"),
         sum(octet_length(col("value"))).as("line_bytes"),
         expr("bit_xor(cast(conv(substring(md5(value), 1, 15), 16, 10) " +

@@ -32,15 +32,11 @@ object TapeFsck {
 
   def fsck(spark: SparkSession, root: String, stream: String): DataFrame = {
     val dir = s"$root/$stream"
-    val lines = spark.read.option("basePath", dir).text(dir)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol))
-    lines
+    Tape.rawLines(spark, dir, Seq(dir))
       .withColumn("declared_first",
-        regexp_extract(col("file"), "^(\\d+)-(\\d+)(?:\\.txt)?$", 1))
+        regexp_extract(col("file"), Tape.SeqRangeRe.regex, 1))
       .withColumn("declared_last",
-        regexp_extract(col("file"), "^(\\d+)-(\\d+)(?:\\.txt)?$", 2))
+        regexp_extract(col("file"), Tape.SeqRangeRe.regex, 2))
       .withColumn("bad_line",
         when(length(col("value")) > 0 &&
           expr("try_to_binary(value, 'base64')").isNull, 1L)

@@ -38,8 +38,6 @@ object TapeManifest {
 
   val ManifestDir = "_manifest"
 
-  private val nameRe = "^(\\d+)-(\\d+)(?:\\.txt)?$"
-
   /** Manifest row schema. `dt` is the partition column of the stored
     * layout; declaring it explicitly keeps its type STRING (partition
     * inference would guess DATE) and keeps old unpartitioned manifests
@@ -65,8 +63,8 @@ object TapeManifest {
       .agg(count(lit(1)).as("n_lines"),
         // content bytes incl. the '\n' the text sink appends per line
         sum(length(col("value")) + lit(1L)).as("line_bytes"))
-      .withColumn("first_seq", regexp_extract(col("file"), nameRe, 1))
-      .withColumn("last_seq", regexp_extract(col("file"), nameRe, 2))
+      .withColumn("first_seq", regexp_extract(col("file"), Tape.SeqRangeRe.regex, 1))
+      .withColumn("last_seq", regexp_extract(col("file"), Tape.SeqRangeRe.regex, 2))
       .filter(col("first_seq") =!= "" &&
         col("first_seq").cast("long") <= col("last_seq").cast("long"))
       .select(col(Tape.DtCol), col("file"),
@@ -74,17 +72,10 @@ object TapeManifest {
         col("last_seq").cast("long").as("last_seq"),
         col("n_lines"), col("line_bytes"))
 
-  private def tapeLines(spark: SparkSession, dir: String,
-                        paths: Seq[String]): DataFrame =
-    spark.read.option("basePath", dir).text(paths: _*)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol))
-
   /** Per-file zone maps, computed distributed over the whole tape. */
   def build(spark: SparkSession, root: String, stream: String): DataFrame = {
     val dir = s"$root/$stream"
-    zoneMapStats(tapeLines(spark, dir, Seq(dir)))
+    zoneMapStats(Tape.rawLines(spark, dir, Seq(dir)))
   }
 
   /** Build and persist the manifest parquet beside the day partitions
@@ -213,7 +204,7 @@ object TapeManifest {
       else {
         val paths = newFiles.toSeq.map { case (dt, f) =>
           s"$dir/${Tape.DtCol}=$dt/$f" }
-        zoneMapStats(tapeLines(spark, dir, paths))
+        zoneMapStats(Tape.rawLines(spark, dir, paths))
       }
     val addedRows = addedStats.count()
 
@@ -274,9 +265,9 @@ object TapeManifest {
     spark.catalog.refreshByPath(manifestPath.toString)
   }
 
-  /** (dt, file) pairs on disk — FS metadata only, no content. With a
-    * scope, lists ONLY the scoped day directories (a missing scoped day
-    * contributes nothing — that is how an expired day reads as
+  /** (dt, file name) pairs on disk — FS metadata only, no content. With
+    * a scope, lists ONLY the scoped day directories (a missing scoped
+    * day contributes nothing — that is how an expired day reads as
     * dropped); without one, walks every `dt=` child of the tape root.
     */
   private def listTapeFiles(spark: SparkSession, dir: String,
@@ -284,24 +275,11 @@ object TapeManifest {
   : Set[(String, String)] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Set.empty
-    val dayDirs: Seq[(String, org.apache.hadoop.fs.Path)] = scope match {
-      case Some(dts) => dts.toSeq.sorted
-        .map(dt => (dt,
-          new org.apache.hadoop.fs.Path(root, s"${Tape.DtCol}=$dt")))
-        .filter { case (_, p) => fs.exists(p) }
-      case None => fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"${Tape.DtCol}="))
-        .map(st =>
-          (st.getPath.getName.stripPrefix(s"${Tape.DtCol}="), st.getPath))
+    val files = scope match {
+      case Some(dts) => Tape.listDays(fs, root, dts)
+      case None => Tape.listFiles(fs, root, _ => true)
     }
-    dayDirs.flatMap { case (dt, day) =>
-      fs.listStatus(day).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
-          !st.getPath.getName.startsWith("_"))
-        .map(st => (dt, st.getPath.getName))
-    }.toSet
+    files.map(f => (f.dt, new org.apache.hadoop.fs.Path(f.file).getName)).toSet
   }
 
   /** Manifest entries whose declared seq range overlaps `[from, to]`. */
@@ -309,29 +287,33 @@ object TapeManifest {
     manifest.filter(col("first_seq") <= to && col("last_seq") >= from)
 
   /** Zone-map-pruned seq-range read: decode ONLY the files whose
-    * declared range overlaps `[from, to]`. Returns the TapePlayer.read
-    * shape (`line, dt, src, payload`) so every downstream (batcher,
-    * replay sink, estimator) composes unchanged. A missing manifest is
-    * an error by design — building it implicitly would silently pay
-    * the full-listing cost the index exists to avoid.
+    * declared range overlaps `[from, to]`, through `format("tape")`
+    * with a `dt` + `src` filter built from the matched manifest rows —
+    * the scan lists only the matched days and reads only the matched
+    * files. Returns the [[TapePlayer.read]] shape (`payload, dt, src`)
+    * so every downstream (batcher, replay sink, estimator) composes
+    * unchanged. A missing manifest is an error by design — building it
+    * implicitly would silently pay the full-listing cost the index
+    * exists to avoid.
     */
   def readSeqRange(spark: SparkSession, root: String, stream: String,
                    from: Long, to: Long): DataFrame = {
     val dir = s"$root/$stream"
     val entries = overlapping(load(spark, root, stream), from, to)
       .select(col(Tape.DtCol), col("file")).collect()
-    val files = entries.map(r =>
-      s"$dir/${Tape.DtCol}=${r.getString(0)}/${r.getString(1)}").toSeq
-    if (files.isEmpty)
-      return spark.range(0).select(
-        lit("").as(Tape.LineCol), lit("").as(Tape.DtCol),
-        lit("").as("src"), lit(Array.empty[Byte]).as(Tape.PayloadCol))
-    spark.read.option("basePath", dir).text(files: _*)
-      .filter(length(col("value")) > 0)
-      .select(
-        col("value").as(Tape.LineCol),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol),
-        input_file_name().as("src"),
-        Tape.decodeLine(col("value")).as(Tape.PayloadCol))
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val days = entries.map(_._1)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = Tape.listDays(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration), path, days)
+      .filter(f => entries((f.dt, new org.apache.hadoop.fs.Path(f.file).getName)))
+    if (files.size != entries.size)
+      throw new java.io.FileNotFoundException(
+        s"${entries.size - files.size} manifest entries of $dir are gone " +
+          "from disk; refresh the manifest")
+    spark.read.format("tape").load(dir)
+      .filter(col(Tape.DtCol).isin(days.toSeq: _*) &&
+        col(Tape.SrcCol).isin(files.map(_.file): _*))
+      .select(Tape.PayloadCol, Tape.DtCol, Tape.SrcCol)
   }
 }

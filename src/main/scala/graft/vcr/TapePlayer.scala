@@ -1,8 +1,9 @@
 package graft.vcr
 
-import java.time.LocalDateTime
+import java.time.{LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Replay: tape → records → batched puts (reference: KinesisPlayer.java).
@@ -10,19 +11,20 @@ import org.apache.spark.sql.functions._
   * The reference lists each day folder in `[start, end)` on the driver,
   * filters objects by last-modified, splits lines, Base64-decodes, and
   * re-emits in ≤500-record / ≤1 MB PutRecords batches. Spark-first:
-  * the day loop + listing is a partition-pruned scan of the `dt=` Hive
-  * layout (the planner prunes directories, no driver listing loop), the
-  * line split/skip-empties/decode are codegen'd expressions, and batch
-  * assembly is a per-partition fold — per-partition batching matches the
-  * reference, whose batches never span S3 objects read on different
-  * threads.
+  * the day loop + listing is the `tape` DataSource V2 scan, which lists
+  * only the day directories the `dt` filter keeps at planning time and
+  * decodes lines in its reader; batch assembly is a per-partition fold —
+  * per-partition batching matches the reference, whose batches never
+  * span S3 objects read on different threads.
   */
 object TapePlayer {
 
-  /** Tape lines for `[start, effectiveEnd(start, end)]`, partition-pruned
-    * by day (reference: KinesisPlayer.java:199-246). Columns:
-    * `line STRING, dt STRING, src STRING (file), payload BINARY`.
-    * Empty lines are skipped (reference: KinesisPlayer.java:170-172).
+  /** The tape for `[start, effectiveEnd(start, end)]`, read through
+    * `format("tape")` with the day range pushed into its listing
+    * (reference: KinesisPlayer.java:199-246). Columns:
+    * `payload BINARY, dt STRING, src STRING (file)`. Empty lines are
+    * skipped (reference: KinesisPlayer.java:170-172); a line that is
+    * not standard Base64 fails the read, naming its file and line.
     *
     * GRANULARITY, documented divergence: this selects whole DAYS — a
     * `play 2024-01-10T12:00:00` replays all of 2024-01-10. The
@@ -38,68 +40,27 @@ object TapePlayer {
            start: LocalDateTime, end: Option[LocalDateTime],
            mtimeWindow: Boolean = false): DataFrame = {
     val endEff = TimeArg.effectiveEnd(start, end)
+    val (first, last) = (start.toLocalDate.toString, endEff.toLocalDate.toString)
     val dir = s"$root/$stream"
-    val base = if (!mtimeWindow) {
-      // read.text keeps the inferred dt= partition column, so the
-      // day-range filter is partition pruning in the planner — the Spark
-      // form of the reference's "list only day folders in range" loop.
-      spark.read.option("basePath", dir).text(dir)
-        .filter(col(Tape.DtCol) >= lit(start.toLocalDate.toString) &&
-          col(Tape.DtCol) <= lit(endEff.toLocalDate.toString))
-    } else {
-      // Strict reference parity (KinesisPlayer.java:203-215): objects
-      // with mtime second STRICTLY inside (start, end). The listing is
-      // one metadata pass over the pruned day dirs, like Estimator.
-      val files = mtimeWindowFiles(spark, dir, start, endEff)
-      if (files.isEmpty)
-        return spark.emptyDataFrame.select(
-          lit("").as(Tape.LineCol), lit("").as(Tape.DtCol),
-          lit("").as("src"), lit(Array.empty[Byte]).as(Tape.PayloadCol))
-          .limit(0)
-      spark.read.option("basePath", dir).text(files: _*)
-    }
-    base
-      .filter(length(col("value")) > 0)
-      .select(
-        col("value").as(Tape.LineCol),
-        col(Tape.DtCol).cast("string").as(Tape.DtCol),
-        input_file_name().as("src"),
-        Tape.decodeLine(col("value")).as(Tape.PayloadCol))
-  }
-
-  /** Files in the pruned day dirs whose mtime is strictly inside
-    * `(start, end)` at epoch-second granularity, like the reference's
-    * object filter.
-    */
-  private def mtimeWindowFiles(spark: SparkSession, dir: String,
-                               start: LocalDateTime,
-                               endEff: LocalDateTime): Seq[String] = {
-    import java.time.ZoneOffset
-    val startSec = start.toEpochSecond(ZoneOffset.UTC)
-    val endSec = endEff.toEpochSecond(ZoneOffset.UTC)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
-    var d = start.toLocalDate
-    while (!d.isAfter(endEff.toLocalDate)) {
-      val dayDir = new org.apache.hadoop.fs.Path(root, s"${Tape.DtCol}=$d")
-      if (fs.exists(dayDir)) {
-        fs.listStatus(dayDir).foreach { st =>
-          val mtimeSec = st.getModificationTime / 1000L
-          if (st.isFile && !st.getPath.getName.startsWith(".") &&
-            mtimeSec > startSec && mtimeSec < endSec)
-            out += st.getPath.toString
-        }
+    val days = spark.read.format("tape").load(dir)
+      .filter(col(Tape.DtCol) >= lit(first) && col(Tape.DtCol) <= lit(last))
+    val tape =
+      if (!mtimeWindow) days
+      else {
+        // Strict reference parity (KinesisPlayer.java:203-215): objects
+        // with mtime second STRICTLY inside (start, end), as a `src`
+        // filter the scan applies while listing.
+        val (startSec, endSec) =
+          (start.toEpochSecond(ZoneOffset.UTC), endEff.toEpochSecond(ZoneOffset.UTC))
+        val path = new Path(dir)
+        val inWindow = Tape.listFiles(
+          path.getFileSystem(spark.sparkContext.hadoopConfiguration), path,
+          dt => dt >= first && dt <= last)
+          .filter(f => f.mtime / 1000L > startSec && f.mtime / 1000L < endSec)
+        days.filter(col(Tape.SrcCol).isin(inWindow.map(_.file): _*))
       }
-      d = d.plusDays(1)
-    }
-    out.result()
+    tape.select(Tape.PayloadCol, Tape.DtCol, Tape.SrcCol)
   }
-
-  /** Decoded payloads only (reference: objectToPayloads). */
-  def payloads(spark: SparkSession, root: String, stream: String,
-               start: LocalDateTime, end: Option[LocalDateTime]): DataFrame =
-    read(spark, root, stream, start, end).select(Tape.PayloadCol)
 
   /** Assemble per-partition PutRecords batches and emit them through a
     * [[ReplaySink]], with partial-failure retry. Returns records sent.

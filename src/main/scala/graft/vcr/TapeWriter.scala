@@ -25,10 +25,11 @@ object TapeWriter {
   /** Write a record frame (`data BINARY, seq BIGINT, ts TIMESTAMP`) as a
     * tape under `root/stream/`. Returns the number of files written.
     *
-    * The returned count costs one `dt=*／*` metadata glob over the WHOLE
-    * tape — fine for a batch CLI verb, wrong per streaming trigger (an
-    * O(archive) LIST on a hot path, the same class as the unscoped V14
-    * walk). Streams use [[ingest]], which skips it.
+    * The returned count costs one metadata listing of the WHOLE tape
+    * ([[Tape.listFiles]]) — fine for a batch CLI verb, wrong per
+    * streaming trigger (an O(archive) LIST on a hot path, the same
+    * class as the unscoped V14 walk). Streams use [[ingest]], which
+    * skips it.
     *
     * @param numFiles target parallelism (≅ number of flushed buffers);
     *                 pick so each file ≈ the reference's 100 MiB buffer.
@@ -41,9 +42,8 @@ object TapeWriter {
     val path = new Path(dir)
     val fs = FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
     if (!ingest(records, root, stream, numFiles, mode)) return 0
-    // one metadata glob for the return value; the write itself is done
-    fs.globStatus(new Path(path, s"${Tape.DtCol}=*/*")).count(st =>
-      st.isFile && !st.getPath.getName.startsWith("."))
+    // one metadata listing for the return value; the write itself is done
+    Tape.listFiles(fs, path, _ => true).size
   }
 
   /** The write itself, no counting glob — the streaming sink's form.

@@ -161,8 +161,9 @@ object VcrCli {
       case Some("digest") =>
         // archive integrity fingerprints (V15): one (n, bytes, xor)
         // row per day partition — what a replica compare diffs
-        // instead of the data. Hashes the STORED line (the base64
-        // envelope), binary-safe. Bounded collect: one row per day.
+        // instead of the data. Hashes the base64 envelope of each
+        // payload — the line the writer stored — binary-safe. Bounded
+        // collect: one row per day.
         val stream = config.sourceStream.getOrElse(
           throw new IllegalArgumentException("VCR_SOURCE_STREAM_NAME must be set"))
         val fromArg = args.lift(1).getOrElse(
@@ -171,7 +172,8 @@ object VcrCli {
         val start = TimeArg.parseOrThrow(fromArg, "from")
         val end = args.lift(2).map(TimeArg.parseOrThrow(_, "to"))
         val tape = TapePlayer.read(spark, root, stream, start, end)
-        graft.streaming.StreamDigest.digests(tape, col(Tape.LineCol))
+        graft.streaming.StreamDigest.digests(tape,
+          Tape.encodeLine(col(Tape.PayloadCol)))
           .orderBy(col(Tape.DtCol))
           .collect().foreach { r =>
             println(s"${r.getString(0)}  n=${r.getLong(1)} " +

@@ -83,6 +83,31 @@ class TapeDataSourceSpec extends AnyFunSuite {
     assert(parts.length < nFiles) // ...but fewer tasks than files
   }
 
+  test("a small multi-file tape still spreads across cores") {
+    val path = writeTape()
+    val scan = new TapeScan(path, Array.empty, TapeTable.Schema,
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    val parts = scan.planInputPartitions()
+    assert(parts.flatMap(_.asInstanceOf[TapeInputPartition].files).length > 1)
+    // a few KB is far under 128 MiB, yet local[4] gets more than one task
+    assert(parts.length > 1, s"${parts.length} partitions")
+  }
+
+  test("src filters prune to the named files at planning time") {
+    val path = writeTape()
+    val all = spark.read.format("tape").load(path)
+    val one = all.select("src").distinct().collect().map(_.getString(0)).min
+    val df = all.filter(col("src") === one)
+    val plan = df.queryExecution.executedPlan.toString()
+    assert(plan.contains("prunedBy=[") && plan.contains("EqualTo(src,"), plan)
+    assert(df.select("src").distinct().collect().map(_.getString(0)).toSeq ===
+      Seq(one))
+    val perFile = all.groupBy("src").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(df.count() === perFile(one))
+  }
+
   test("SQL can query the tape via the registered short name") {
     val path = writeTape()
     spark.sql(

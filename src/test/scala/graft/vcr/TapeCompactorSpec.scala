@@ -220,6 +220,11 @@ class TapeCompactorSpec extends AnyFunSuite {
     assert(f.renameTo(new java.io.File(day, "999-1.txt")))
     day.listFiles().filter(_.getName.endsWith(".crc"))
       .foreach(x => Files.delete(x.toPath))
+    // until then the seek must not silently skip the indexed file
+    // that is gone from disk
+    intercept[java.io.FileNotFoundException] {
+      TapeManifest.readSeqRange(spark, root, "s", 1L, 240L)
+    }
     spark.catalog.refreshByPath(s"$root/s")
     val rebuilt = TapeManifest.build(spark, root, "s").collect()
     assert(rebuilt.length === dayFiles.length - 1)

@@ -63,11 +63,11 @@ class VcrSpec extends AnyFunSuite {
       LocalDateTime.parse("2024-01-01T00:00:00"), None)
     assert(day1.select(Tape.DtCol).distinct().collect()
       .map(_.getString(0)).toSet === Set("2024-01-01"))
-    // partition filter must appear as a pushed partition predicate, not
-    // a post-scan filter over all days
+    // the day range must be pushed into the tape scan's listing, not
+    // applied as a post-scan filter over all days
     val plan = day1.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") || !plan.contains("dt=2024-01-02"),
-      "expected dt partition pruning in the physical plan")
+    assert(plan.contains("prunedBy=[GreaterThanOrEqual(dt,2024-01-01)"), plan)
+    assert(!plan.contains("dt=2024-01-02"), plan)
   }
 
   test("empty tape lines are skipped like the reference's parser") {
@@ -81,6 +81,22 @@ class VcrSpec extends AnyFunSuite {
       .select(Tape.PayloadCol).collect()
       .map(r => new String(r.getAs[Array[Byte]](0), UTF_8)).sorted
     assert(got.toSeq === Seq("a", "b"))
+  }
+
+  test("a line that is not standard Base64 fails replay, naming its file") {
+    val root = tmpDir()
+    val dir = new java.io.File(s"$root/stream-bad/dt=2024-01-01")
+    dir.mkdirs()
+    // the MIME decoder behind unbase64 reads "YW*Jj" as "abc"; fsck
+    // flags it, so replay must not accept it either
+    Files.write(dir.toPath.resolve("1-3.txt"),
+      (Tape64.enc("a") + "\nYW*Jj\n" + Tape64.enc("b") + "\n").getBytes(UTF_8))
+    val tape = TapePlayer.read(spark, root, "stream-bad",
+      LocalDateTime.parse("2024-01-01T00:00:00"), None)
+    val e = intercept[Exception] {
+      TapePlayer.play(tape, DirectoryReplaySinkFactory(tmpDir()))
+    }
+    assert(e.getMessage.contains("dt=2024-01-01/1-3.txt:2"), e.getMessage)
   }
 
   test("KinesisBatcher: count cap, byte cap, oversize drop, no loss") {
@@ -172,6 +188,28 @@ class VcrSpec extends AnyFunSuite {
     assert(all.files > day1.files)
     assert(all.bytes > day1.bytes)
     assert(day1.human === "0 mins")
+  }
+
+  test("estimator counts exactly the files and bytes replay reads") {
+    val root = tmpDir()
+    TapeWriter.write(recordsDf(300), root, "stream-g", numFiles = 4)
+    // a writer's in-progress temp and a side file share the day dir
+    val day = new java.io.File(s"$root/stream-g/dt=2024-01-02")
+    Files.write(day.toPath.resolve(".inprogress-0.txt"),
+      (Tape64.enc("half") + "\n").getBytes(UTF_8))
+    Files.write(day.toPath.resolve("_SUCCESS"), Array.emptyByteArray)
+    val (start, end) = (LocalDateTime.parse("2024-01-01T00:00:00"),
+      Some(LocalDateTime.parse("2024-01-03T00:00:00")))
+    val est = Estimator.estimate(spark.sparkContext.hadoopConfiguration,
+      root, "stream-g", start, end, shards = 2)
+    val srcs = TapePlayer.read(spark, root, "stream-g", start, end)
+      .select(Tape.SrcCol).distinct().collect().map(_.getString(0))
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val sizes = srcs.map(s => fs.getFileStatus(new org.apache.hadoop.fs.Path(s)).getLen)
+    assert(srcs.length >= 3)
+    assert(est.files === srcs.length.toLong)
+    assert(est.bytes === sizes.sum)
   }
 
   test("config env parsing + validation match reference rules") {
